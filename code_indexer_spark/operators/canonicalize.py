@@ -7,11 +7,16 @@ min-id-as-canonical rule — so the Spark result equals the oracle's
 union-find exactly (tests/test_canonicalize.py).
 
 Scale notes (the whole point of this module):
+- each entity is ONE row carrying its distinct-shingle array, its
+  32-component signature and its 16 band keys, all built by array
+  column expressions; only the band keys are exploded, so blocking cost
+  scales with entities × bands, never with entities × shingles × hashes;
 - blocking key is (entity_type, first_token, band_id, band_key) — bucket
   sizes stay O(near-duplicates), never O(entities); the self-join is a
   shuffle on that compound key and AQE splits any residual skew;
-- the pairwise Jaccard verify runs only on blocked candidates (the
-  reference's over-fetch-then-filter shape, SURVEY.md T3);
+- the pairwise Jaccard verify runs only on blocked candidates, on the
+  shingle arrays the join already carries (the reference's
+  over-fetch-then-filter shape, SURVEY.md T3);
 - connected components use the large-star/small-star algorithm
   (Kiveris et al., "Connected Components in MapReduce and Beyond"),
   which converges in O(log n) rounds and never materializes a
@@ -28,127 +33,103 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-def _char_shingles_expr(norm_col, k: int):
-    """array of distinct k-char shingles of an already-normalized name
-    (set semantics via array_distinct); shorter-than-k names shingle to
-    the whole name — the Column twin of kernel.hashes.char_shingles."""
-    n = F.length(norm_col)
-    return F.when(
-        n >= k,
-        F.array_distinct(F.transform(
-            F.sequence(F.lit(1), n - (k - 1)),
-            lambda i: F.substr(norm_col, i, F.lit(k)),
-        )),
-    ).otherwise(F.array(norm_col))
-
 
 def band_stage(entities: DataFrame) -> DataFrame:
-    """entities(entity_id, canonical_name, entity_type) -> exploded
-    (entity_id, canonical_name, entity_type, tok0, band_id, band_key).
+    """entities(entity_id, canonical_name, entity_type) ->
+    (entity_id, entity_type, tok0, sh, band_id, band_key), one row per
+    entity and band; entities with a NULL name emit no rows.
 
-    Entirely JVM-side column expressions (zero Python UDFs on this hot
-    path): the char-3-shingle / seeded-md5 minhash / banded-key scheme
-    of kernel.canon, built with the same construction already proven
-    value-identical in operators.dedup.minhash_long —
-    band_key = md5(sig[2b] || '|' || sig[2b+1]) with
-    sig[i] = min over shingles of md5('<i>|<shingle>'). Equality with
-    the plain-Python kernel oracle is pinned by tests/test_canonicalize.
-
-    An empty normalized name has NO shingles; kernel.minhash_signature
-    then yields all-'' components, so every band key is md5('|') — those
-    rows take a literal fast path (the explode would drop them)."""
-    from ..kernel.canon import BANDS, NUM_HASHES, SHINGLE_K
+    Entirely JVM-side column expressions (zero Python UDFs): the
+    char-3-shingle / seeded-md5 minhash / banded-key scheme of
+    kernel.canon, computed per entity row —
+    sh = distinct 3-char shingles of the normalized name (a shorter
+    name is its own single shingle, an empty one has none),
+    sig[i] = min over sh of md5('<i>|<shingle>'), '' when sh is empty,
+    band_key[b] = md5(sig[2b] || '|' || sig[2b+1]).
+    Equality with the plain-Python kernel oracle is pinned by
+    tests/test_canonicalize."""
     from ..functions.columns import norm_surface
+    from ..kernel.canon import BANDS, NUM_HASHES, SHINGLE_K
 
     rows_per_band = NUM_HASHES // BANDS
-    base = entities.select(
-        "entity_id", "canonical_name", "entity_type",
-        norm_surface(F.col("canonical_name")).alias("_norm"),
-    ).withColumn("tok0", F.split("_norm", " ").getItem(0))
-    n = F.length("_norm")
-    shingles = _char_shingles_expr(F.col("_norm"), SHINGLE_K)
-
-    nonempty = base.filter(n > 0)
-    sig = (
-        nonempty.select("entity_id", F.explode(shingles).alias("shingle"))
-        .select("entity_id", "shingle",
-                F.explode(F.sequence(F.lit(0), F.lit(NUM_HASHES - 1)))
-                .alias("seed"))
-        .groupBy("entity_id", "seed")
-        .agg(F.min(F.md5(F.concat_ws(
-            "|", F.col("seed").cast("string"), F.col("shingle"))))
-            .alias("mh"))
+    norm = F.col("_norm")
+    n = F.length(norm)
+    base = entities.filter(F.col("canonical_name").isNotNull()).select(
+        "entity_id", "entity_type",
+        norm_surface(F.col("canonical_name")).alias("_norm"))
+    sh = (
+        F.when(n >= SHINGLE_K, F.array_distinct(F.transform(
+            F.sequence(F.lit(1), n - (SHINGLE_K - 1)),
+            lambda i: F.substr(norm, i, F.lit(SHINGLE_K)))))
+        .when(n > 0, F.array(norm))
+        .otherwise(F.array().cast("array<string>"))
     )
-    banded = (
-        sig.withColumn("band_id", (F.col("seed") / rows_per_band).cast("int"))
-        .groupBy("entity_id", "band_id")
-        # order inside the band is fixed by seed -> deterministic key
-        .agg(F.md5(F.array_join(
-            F.array_sort(F.collect_list(F.struct("seed", "mh")))
-            .getField("mh"), "|")).alias("band_key"))
+    sig = F.transform(
+        F.sequence(F.lit(0), F.lit(NUM_HASHES - 1)),
+        lambda i: F.coalesce(F.array_min(F.transform(
+            "sh", lambda s: F.md5(F.concat_ws("|", i.cast("string"), s)))),
+            F.lit("")))
+    bands = F.transform(
+        F.sequence(F.lit(0), F.lit(BANDS - 1)),
+        lambda b: F.md5(F.array_join(
+            F.slice(F.col("_sig"), b * rows_per_band + 1, rows_per_band), "|")))
+    return (
+        base.select("entity_id", "entity_type",
+                    F.split(norm, " ").getItem(0).alias("tok0"),
+                    sh.alias("sh"))
+        .withColumn("_sig", sig)
+        .select("entity_id", "entity_type", "tok0", "sh",
+                F.posexplode(bands).alias("band_id", "band_key"))
     )
-    attrs = base.select("entity_id", "canonical_name", "entity_type", "tok0")
-    out = banded.join(attrs, "entity_id").select(
-        "entity_id", "canonical_name", "entity_type", "tok0",
-        "band_id", "band_key")
 
-    empty_key = F.md5(F.lit("|".join([""] * rows_per_band)))
-    empties = base.filter(n == 0).select(
-        "entity_id", "canonical_name", "entity_type", "tok0",
-        F.explode(F.sequence(F.lit(0), F.lit(BANDS - 1))).alias("band_id"),
-    ).withColumn("band_key", empty_key).withColumn(
-        "band_id", F.col("band_id").cast("int"))
-    return out.unionByName(empties)
+
+def _blocked(entities: DataFrame) -> DataFrame:
+    """Self-join of band_stage on the blocking key -> (id_a, sh_a, id_b,
+    sh_b) with id_a < id_b, one row per shared band. The shuffle-hash
+    hint keeps an Exchange on both sides, so Spark reuses one exchange
+    and band_stage runs once (a broadcast side would recompute it)."""
+    banded = band_stage(entities)
+    a = banded.alias("a")
+    b = banded.hint("shuffle_hash").alias("b")
+    return a.join(
+        b,
+        on=[
+            F.col("a.entity_type") == F.col("b.entity_type"),
+            F.col("a.tok0") == F.col("b.tok0"),
+            F.col("a.band_id") == F.col("b.band_id"),
+            F.col("a.band_key") == F.col("b.band_key"),
+            F.col("a.entity_id") < F.col("b.entity_id"),
+        ],
+    ).select(
+        F.col("a.entity_id").alias("id_a"),
+        F.col("a.sh").alias("sh_a"),
+        F.col("b.entity_id").alias("id_b"),
+        F.col("b.sh").alias("sh_b"),
+    )
 
 
 def candidate_pairs(entities: DataFrame) -> DataFrame:
-    """Self-join on the blocking key -> distinct (id_a, name_a, id_b,
-    name_b) with id_a < id_b."""
-    banded = band_stage(entities)
-    a = banded.alias("a")
-    b = banded.alias("b")
-    return (
-        a.join(
-            b,
-            on=[
-                F.col("a.entity_type") == F.col("b.entity_type"),
-                F.col("a.tok0") == F.col("b.tok0"),
-                F.col("a.band_id") == F.col("b.band_id"),
-                F.col("a.band_key") == F.col("b.band_key"),
-                F.col("a.entity_id") < F.col("b.entity_id"),
-            ],
-        )
-        .select(
-            F.col("a.entity_id").alias("id_a"),
-            F.col("a.canonical_name").alias("name_a"),
-            F.col("b.entity_id").alias("id_b"),
-            F.col("b.canonical_name").alias("name_b"),
-        )
-        .distinct()
-    )
+    """Distinct blocked pairs (id_a, id_b) with id_a < id_b."""
+    return _blocked(entities).select("id_a", "id_b").distinct()
 
 
 def verified_edges(entities: DataFrame) -> DataFrame:
-    """Candidate pairs filtered by exact shingle Jaccard >= threshold —
-    pure column expressions (array_intersect/array_union over the
-    distinct-shingle arrays = exact set Jaccard; an empty∩empty pair is
-    1.0 like kernel.hashes.jaccard). Runs only on blocked candidates,
-    and now with zero Python UDFs anywhere in canonicalization."""
-    from ..kernel.canon import JACCARD_THRESHOLD, SHINGLE_K
-    from ..functions.columns import norm_surface
+    """Blocked pairs filtered by exact shingle Jaccard >= threshold —
+    array_intersect/array_union over the distinct-shingle arrays the
+    join carries = exact set Jaccard; an empty∩empty pair is 1.0 like
+    kernel.hashes.jaccard. Verifying before the distinct keeps the
+    arrays out of the aggregate."""
+    from ..kernel.canon import JACCARD_THRESHOLD
 
-    sa = _char_shingles_expr(
-        norm_surface(F.coalesce(F.col("name_a"), F.lit(""))), SHINGLE_K)
-    sb = _char_shingles_expr(
-        norm_surface(F.coalesce(F.col("name_b"), F.lit(""))), SHINGLE_K)
-    inter = F.size(F.array_intersect(sa, sb))
-    uni = F.size(F.array_union(sa, sb))
+    inter = F.size(F.array_intersect("sh_a", "sh_b"))
+    uni = F.size(F.array_union("sh_a", "sh_b"))
     jac = F.when(uni == 0, F.lit(1.0)).otherwise(
         inter.cast("double") / uni)
     return (
-        candidate_pairs(entities)
+        _blocked(entities)
         .filter(jac >= JACCARD_THRESHOLD)
         .select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
+        .distinct()
     )
 
 
@@ -218,10 +199,11 @@ def large_star_small_star(edges: DataFrame, max_iter: int = 25) -> DataFrame:
 
 # Below this edge count the component structure fits trivially on the
 # driver and the O(log n)-round distributed loop is pure fixed overhead
-# (~20 sequential tiny jobs). Adaptive algorithm choice, same spirit as
-# AQE's runtime re-planning: tiny graph -> driver union-find; big graph
-# -> large-star/small-star. Both produce the identical mapping
-# (component minimum), proven equal by tests/test_canonicalize.py.
+# (several sequential tiny jobs per round). Adaptive algorithm choice,
+# same spirit as AQE's runtime re-planning: tiny graph -> driver
+# union-find; big graph -> large-star/small-star. Both produce the
+# identical mapping (component minimum), proven equal by
+# tests/test_canonicalize.py.
 SMALL_GRAPH_EDGES = 2_000_000
 
 
@@ -230,7 +212,7 @@ def connected_components(edges: DataFrame,
     """edges(src, dst) -> (entity_id, canonical_id), canonical =
     component min. Dispatches on edge count; at 10^9-entity scale the
     distributed star loop runs, at bench scale the driver union-find
-    collapses ~20 scheduler round trips into one collect."""
+    collapses the per-round scheduler round trips into one collect."""
     edges = edges.select("src", "dst").distinct()
     edges.persist()  # one materialization serves both count and collect
     try:

@@ -60,23 +60,27 @@ def cached_plan(df: DataFrame,
 
     # semanticHash is only a 32-bit prefilter — Spark itself always
     # pairs it with sameResult() — so a hit must CONFIRM the stored
-    # plan really is this plan before serving it (ADVICE r4: a
-    # colliding hash must never serve the wrong persisted table).
-    # Distinct same-hash plans get salted key slots; after 16
-    # colliding plans (astronomically unlikely) we skip caching rather
-    # than evict someone else's live entry.
+    # plan really is this plan before serving it (a colliding hash must
+    # never serve the wrong persisted table). Distinct same-hash plans
+    # get salted key slots. Every slot is checked for a confirmed hit
+    # before the first empty one is taken: once an earlier colliding
+    # entry is evicted, its freed slot must not receive a second
+    # persisted copy of a plan that already lives in a later slot.
+    # After 16 colliding plans (astronomically unlikely) we skip
+    # caching rather than evict someone else's live entry.
     analyzed = df._jdf.queryExecution().analyzed()
     base = (df.sparkSession.sparkContext.applicationId,
             analyzed.semanticHash())
-    for slot in range(16):
-        key = base + (slot,)
+    keys = [base + (slot,) for slot in range(16)]
+    for key in keys:
         hit = registry.get(key)
-        if hit is not None and not (
+        if hit is not None and (
                 hit._jdf.queryExecution().analyzed().sameResult(analyzed)):
-            continue
-        # lazy + MEMORY_AND_DISK: at the 100 TB shape this spills
-        # instead of evicting-and-recomputing
-        return cached_persist(
-            registry, key, lambda: df, eager=False,
-            storage_level=StorageLevel.MEMORY_AND_DISK)
-    return df
+            return hit
+    free = next((k for k in keys if k not in registry), None)
+    if free is None:
+        return df
+    # lazy + MEMORY_AND_DISK: at the 100 TB shape this spills instead
+    # of evicting-and-recomputing
+    return cached_persist(registry, free, lambda: df, eager=False,
+                          storage_level=StorageLevel.MEMORY_AND_DISK)

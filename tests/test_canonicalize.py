@@ -113,7 +113,8 @@ def test_empty_edges_clean_input(spark):
 def test_band_stage_matches_kernel(spark):
     """The JVM-side band_stage must emit exactly the (tok0, band_id,
     band_key) set kernel.canon computes in plain Python — including the
-    short-name (<3 chars) and empty-name edge cases."""
+    short-name (<3 chars), exactly-k, repeated-shingle, non-ASCII and
+    empty-name edge cases."""
     from code_indexer_spark.kernel.canon import first_token, name_bands
     from code_indexer_spark.operators.canonicalize import band_stage
 
@@ -121,7 +122,10 @@ def test_band_stage_matches_kernel(spark):
             ("e2", "ACME Corp.", "org"),
             ("e3", "Jo", "person"),          # shorter than shingle k
             ("e4", "", "org"),               # empty name
-            ("e5", "  ?!  ", "org")]         # normalizes to empty
+            ("e5", "  ?!  ", "org"),         # normalizes to empty
+            ("e6", "aaaaaa", "org"),         # every shingle is 'aaa'
+            ("e7", "Abc", "org"),            # exactly one shingle
+            ("e8", "Zoë Müller Straße", "person")]  # non-ASCII
     df = spark.createDataFrame(
         ents, ["entity_id", "canonical_name", "entity_type"])
     got = {(r.entity_id, r.tok0, r.band_id, r.band_key)
@@ -132,3 +136,46 @@ def test_band_stage_matches_kernel(spark):
         for band_id, band_key in name_bands(name)
     }
     assert got == want
+
+
+def test_candidates_and_edges_equal_kernel(spark, kg_small, entities):
+    """The Spark blocking and verification steps, not only the final
+    mapping, equal kernel.canon's candidate-pair and verified-edge
+    sets (the counts perfbench reports come from the kernel)."""
+    from code_indexer_spark.kernel.canon import (
+        candidate_pairs as kernel_pairs, verified_edges as kernel_edges)
+    from code_indexer_spark.operators.canonicalize import (
+        candidate_pairs, verified_edges)
+
+    ents = [(e["entity_id"], e["canonical_name"], e["entity_type"])
+            for e in entities]
+    df = spark.read.parquet(f"{kg_small}/entities.parquet")
+    want_pairs = kernel_pairs(ents)
+    got_pairs = [(r.id_a, r.id_b) for r in candidate_pairs(df).collect()]
+    assert len(got_pairs) == len(set(got_pairs))
+    assert set(got_pairs) == want_pairs
+    got_edges = sorted((r.src, r.dst) for r in verified_edges(df).collect())
+    assert got_edges == kernel_edges(ents, want_pairs)
+    assert 0 < len(got_edges) < len(want_pairs)
+
+
+def test_null_name_maps_to_itself(spark):
+    """A NULL canonical_name emits no band rows, so the entity maps to
+    itself and never merges, not even with other NULL-named entities
+    of the same type."""
+    from code_indexer_spark.operators.canonicalize import (
+        band_stage, canonical_mapping)
+
+    ents = spark.createDataFrame(
+        [("n1", None, "org"), ("n2", None, "org"),
+         ("a1", "Acme Corp", "org"), ("a2", "Acme Corp Inc", "org"),
+         ("z1", "", "org"), ("z2", "", "org")],
+        "entity_id string, canonical_name string, entity_type string")
+    assert {r.entity_id for r in band_stage(ents).collect()} == {
+        "a1", "a2", "z1", "z2"}
+    m = {r.entity_id: r.canonical_id
+         for r in canonical_mapping(ents).collect()}
+    # empty names share every band and Jaccard(empty, empty) = 1.0,
+    # exactly as kernel.canon merges them
+    assert m == {"n1": "n1", "n2": "n2", "a1": "a1", "a2": "a1",
+                 "z1": "z1", "z2": "z1"}

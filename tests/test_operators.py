@@ -1,6 +1,8 @@
 """Spark operator unit tests on tiny hand-computed inputs (dedup,
 similarity, fusion, filters, graph)."""
 
+import json
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -691,6 +693,67 @@ def test_shingle_cache_collision_serves_right_plan(spark):
             df = dedup._SHINGLE_CACHE.pop(k, None)
             if df is not None:
                 df.unpersist()
+
+
+def test_plan_cache_hit_in_later_slot_survives_eviction(spark):
+    """util.cached_plan checks all salted slots for a confirmed hit
+    before it takes the first empty one: once the colliding entry in
+    slot 0 is evicted, a repeat lookup must serve the live slot-1 entry
+    instead of persisting the same plan a second time in slot 0."""
+    from code_indexer_spark.operators import dedup
+
+    a = spark.createDataFrame([(1, "alpha beta gamma delta")],
+                              ["doc_id", "text"])
+    b = spark.createDataFrame([(9, "totally different words entirely")],
+                              ["doc_id", "text"])
+    sh_a = dedup.word_shingles_df(a)
+    base = (spark.sparkContext.applicationId,
+            sh_a._jdf.queryExecution().analyzed().semanticHash())
+    dedup._SHINGLE_CACHE[base + (0,)] = dedup.word_shingles_df(b).persist()
+    try:
+        first = dedup._cached_shingles(sh_a)
+        assert dedup._SHINGLE_CACHE[base + (1,)] is first
+        dedup._SHINGLE_CACHE.pop(base + (0,)).unpersist()
+        again = dedup._cached_shingles(dedup.word_shingles_df(a))
+        assert again is first
+        assert [k for k in dedup._SHINGLE_CACHE if k[:2] == base] == [
+            base + (1,)]
+        assert {r.shingle for r in again.collect()} == {
+            "alpha beta gamma", "beta gamma delta"}
+    finally:
+        for k in (base + (0,), base + (1,)):
+            df = dedup._SHINGLE_CACHE.pop(k, None)
+            if df is not None:
+                df.unpersist()
+
+
+def test_bench_compact_line_enforces_cap():
+    """bench.py's last line stays within 500 chars even when the
+    optional scaling/extras keys alone overflow it: the queries go
+    first, then the optional keys; the contract keys always stay."""
+    import bench
+
+    compact = {
+        "metric": "bench_total_wall", "value": 12.5, "unit": "sec",
+        "sf": 0.1, "cpus": 4, "n_queries": 3,
+        "queries": {"q1": 1.0, "q2": 2.0, "q3": 3.0},
+        "queries_calibrated": {"q1": 1.0, "q2": 2.0, "q3": 3.0},
+        "triples_per_sec": 1000.0,
+        "scaling_median_eff": [0.9] * 60,
+        "scaling_best_eff": {f"pair_{i}": 0.95 for i in range(40)},
+    }
+    line = bench.compact_line(compact)
+    assert len(line) <= 500
+    out = json.loads(line)
+    assert {"metric", "value", "unit", "queries", "sf"} <= set(out)
+    assert out["queries"] == {}
+    assert "queries_calibrated" not in out
+    assert "scaling_best_eff" not in out
+    # shedding stops as soon as the line fits
+    assert out["triples_per_sec"] == 1000.0
+    small = dict(compact, scaling_median_eff=0.9, scaling_best_eff=0.95,
+                 queries={"q1": 1.0}, queries_calibrated={"q1": 1.0})
+    assert json.loads(bench.compact_line(dict(small))) == small
 
 
 def test_call_chains_releases_superseded_checkpoints(spark):
