@@ -1,11 +1,19 @@
 """The KG-construction pipeline: pages -> extract -> (chunks, triples)
 -> canonicalize -> nodes/edges.
 
-One declarative DataFrame job per stage; Catalyst fuses the extract +
-triple UDF stages into a single pass over pages (both are narrow
-mapInPandas transforms). The reference's thread-pool lifecycle
-(smart_indexer.py:277-640 -> high_throughput_processor.py:262-802) is
-replaced by Spark stage parallelism — SURVEY.md §3.1 mapping.
+`run_pipeline` runs two independent branches at the same time, each a
+chain of declarative DataFrame jobs:
+- chunk branch: pages -> extract -> chunk -> embed -> partitioned
+  chunks write, on one driver thread;
+- triples branch: canonical mapping -> raw triples -> canonical triples
+  -> triples, nodes and edges writes, on the calling thread.
+Each branch parses the html in its own mapInPandas pass; the chunk
+branch never reads the canonical mapping, so its jobs fill the cores
+the mostly single-task canonicalization stages leave idle. The
+reference's thread-pool lifecycle (smart_indexer.py:277-640 ->
+high_throughput_processor.py:262-802) is replaced by Spark stage
+parallelism plus these two concurrent job streams — SURVEY.md §3.1
+mapping.
 
 Partitioning at scale (SURVEY.md §7.1 step 7):
 - pages: days(warc_ts) + bucket(url) (Iceberg spec; here the parquet
@@ -31,19 +39,45 @@ EDGE_SALT_BUCKETS = 16
 
 def read_pages(spark: SparkSession, kg_dir: str,
                for_udf: bool = False) -> DataFrame:
-    """Read the pages table. With for_udf=True, ensure at least
-    defaultParallelism input partitions for the CPU-bound Arrow-UDF
-    stages. Spark's file scan already targets
-    spark.sql.files.minPartitionNum = defaultParallelism splits, so the
-    repartition (a shuffle of the raw html bytes) only triggers when the
-    scan genuinely can't split enough — at cluster scale the table is
-    partitioned by days(warc_ts)/bucket(url) and this is a no-op."""
+    """Read the pages table. With for_udf=True, ensure the CPU-bound
+    Arrow-UDF stages get enough input partitions that hold rows. Spark's
+    file scan already targets spark.sql.files.minPartitionNum splits,
+    but a parquet split reads only the row groups whose midpoint falls
+    inside it: one row group scans as one split with rows and the rest
+    empty. So the non-empty splits are counted as at most the row groups
+    in the file footers (read only when there are fewer files than
+    defaultParallelism), and the repartition (a shuffle of the raw html
+    bytes) only triggers when those are too few — at cluster scale the
+    table is partitioned by days(warc_ts)/bucket(url) and this is a
+    no-op."""
     df = spark.read.parquet(f"{kg_dir}/pages.parquet")
     if for_udf:
         want = spark.sparkContext.defaultParallelism
-        if df.rdd.getNumPartitions() < max(2, want // 2):
+        splits = df.rdd.getNumPartitions()
+        # a JVM array: a table of many files never crosses into Python
+        files = df._jdf.inputFiles()
+        if len(files) < want:
+            splits = min(splits, _row_groups(spark, files))
+        if want > 1 and splits < max(2, want // 2):
             df = df.repartition(want)
     return df
+
+
+def _row_groups(spark: SparkSession, files) -> int:
+    """Total row groups of the parquet files, from their footers (read
+    through the session's Hadoop filesystem, so any URI Spark reads)."""
+    jvm = spark.sparkContext._jvm
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    total = 0
+    for f in files:
+        reader = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(
+            jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+                jvm.org.apache.hadoop.fs.Path(f), conf))
+        try:
+            total += reader.getRowGroups().size()
+        finally:
+            reader.close()
+    return total
 
 
 def read_alias(spark: SparkSession, kg_dir: str) -> DataFrame:
@@ -210,7 +244,10 @@ def run_incremental(
     file's old points even when the new parse emits none)."""
     from ..sources.tables import reconcile_status
 
-    pages = read_pages(spark, kg_dir, for_udf=True)
+    # a plain read: the whole corpus feeds only the md5 snapshot, and a
+    # for_udf repartition would shuffle every page's html to split the
+    # work list (~7% of pages on a daily delta) that the UDF sees
+    pages = read_pages(spark, kg_dir)
     current_index = pages.select("url", F.md5(F.col("html")).alias("h"))
     status = reconcile_status(indexed_index, current_index, ["url"])
     work = status.filter(F.col("status").isin("added", "changed")) \
@@ -224,36 +261,10 @@ def run_incremental(
     return kept.unionByName(fresh)
 
 
-def run_pipeline(spark: SparkSession, kg_dir: str, out_dir: str) -> dict:
-    """Full batch run: materialize chunks, triples, nodes, edges.
-
-    Row counts come from the Observation API (A12 metrics in SURVEY
-    §2.6) attached to each write — zero extra scan jobs, the same
-    mechanism that would feed lineage metrics on a cluster — instead
-    of re-reading all four tables."""
-    from pyspark.sql import Observation
-
-    entities = read_entities(spark, kg_dir)
-    mapping = cached_canonical_mapping(spark, kg_dir)
-
-    raw = build_raw_triples(spark, kg_dir)
-    triples = apply_canonical(raw, mapping)
-    triples.persist()
-
-    obs = {name: Observation(name) for name in
-           ("triples", "nodes", "edges", "chunks")}
-
-    def observed(df, name):
-        return df.observe(obs[name], F.count(F.lit(1)).alias("n"))
-
-    observed(triples, "triples").write.mode("overwrite").parquet(
-        f"{out_dir}/triples.parquet")
-    nodes = build_nodes(triples, entities, mapping)
-    observed(nodes, "nodes").write.mode("overwrite").parquet(
-        f"{out_dir}/nodes.parquet")
-    edges = build_edges(triples)
-    observed(edges.repartition(F.col("salted_key")), "edges") \
-        .write.mode("overwrite").parquet(f"{out_dir}/edges.parquet")
+def _write_chunks(spark: SparkSession, kg_dir: str, out_dir: str,
+                  observed) -> None:
+    """The chunk branch of run_pipeline: pages -> embedded chunks ->
+    partitioned write. It never reads the canonical mapping."""
     chunks = build_chunks(spark, kg_dir)
     # repartition on the partition column first: one file per bucket
     # instead of (tasks x buckets) tiny files — at 100 TB this is the
@@ -261,7 +272,68 @@ def run_pipeline(spark: SparkSession, kg_dir: str, out_dir: str) -> dict:
     observed(chunks.repartition(F.col("vbucket")), "chunks") \
         .write.mode("overwrite").partitionBy("vbucket") \
         .parquet(f"{out_dir}/chunks.parquet")
-    counts = {name: o.get["n"] for name, o in obs.items()}
-    triples.unpersist()
+
+
+def _write_triples(spark: SparkSession, kg_dir: str, out_dir: str,
+                   observed) -> None:
+    """The triples branch of run_pipeline: canonical mapping ->
+    canonical triples -> the triples, nodes and edges writes."""
+    entities = read_entities(spark, kg_dir)
+    mapping = cached_canonical_mapping(spark, kg_dir)
+    triples = apply_canonical(build_raw_triples(spark, kg_dir), mapping)
+    triples.persist()
+    try:
+        observed(triples, "triples").write.mode("overwrite").parquet(
+            f"{out_dir}/triples.parquet")
+        nodes = build_nodes(triples, entities, mapping)
+        observed(nodes, "nodes").write.mode("overwrite").parquet(
+            f"{out_dir}/nodes.parquet")
+        edges = build_edges(triples)
+        observed(edges.repartition(F.col("salted_key")), "edges") \
+            .write.mode("overwrite").parquet(f"{out_dir}/edges.parquet")
+    finally:
+        triples.unpersist()
+
+
+def run_pipeline(spark: SparkSession, kg_dir: str, out_dir: str) -> dict:
+    """Full batch run: materialize chunks, triples, nodes, edges.
+
+    Two independent branches run at the same time:
+    - the chunk branch (`_write_chunks`: extract -> chunk -> embed ->
+      write) on one driver thread, wrapped with inheritable_thread_target
+      so its jobs keep the caller's job group, local properties and
+      session tags;
+    - the triples branch (`_write_triples`) on the calling thread.
+    The call returns once both are done. A failure in either branch is
+    re-raised only after the other has finished, so no job of this call
+    is still writing when it returns.
+
+    Row counts come from the Observation API (A12 metrics in SURVEY
+    §2.6) attached to each write — zero extra scan jobs, the same
+    mechanism that would feed lineage metrics on a cluster — instead
+    of re-reading all four tables."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
+    from pyspark.sql import Observation
+
+    obs = {name: Observation(name) for name in
+           ("triples", "nodes", "edges", "chunks")}
+
+    def observed(df, name):
+        return df.observe(obs[name], F.count(F.lit(1)).alias("n"))
+
+    with ThreadPoolExecutor(max_workers=1) as pool:
+        chunk_branch = pool.submit(
+            inheritable_thread_target(spark)(_write_chunks),
+            spark, kg_dir, out_dir, observed)
+        try:
+            _write_triples(spark, kg_dir, out_dir, observed)
+        finally:
+            # waits for the chunk branch, failed or not; if both branches
+            # failed, the triples error rides along as __context__
+            chunk_error = chunk_branch.exception()
+            if chunk_error is not None:
+                raise chunk_error
     # mapping stays persisted — it is the session-scoped cache
-    return counts
+    return {name: o.get["n"] for name, o in obs.items()}
